@@ -47,15 +47,14 @@ def prepare() -> None:
     from healthcare_entity_resolution_spark.corpus import generate_files_corpus
     from healthcare_entity_resolution_spark.operators import blocking as B
     from healthcare_entity_resolution_spark.operators import normalize as N
+    from healthcare_entity_resolution_spark.pipeline import code_representatives
     from healthcare_entity_resolution_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     spark = get_spark(app_name="scaling_prep", cores=32)
     files_pdf, _ = generate_files_corpus(n_entities=N_ENTITIES, seed=SEED)
     raw = spark.createDataFrame(files_pdf[["repo", "path", "commit", "lang", "content"]])
     files = N.normalize_files(raw).persist()
-    reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
-    rep_files = files.join(reps, ["content_sha", "file_id"])
+    rep_files = files.join(code_representatives(files), ["content_sha", "file_id"])
     pairs = B.candidate_pairs(B.code_file_block_keys(rep_files, DEFAULT_CONFIG))
     rep_files.write.mode("overwrite").parquet(f"{WORKDIR}/files.parquet")
     pairs.write.mode("overwrite").parquet(f"{WORKDIR}/pairs.parquet")
@@ -64,8 +63,8 @@ def prepare() -> None:
 
 def child(cpus: int) -> None:
     os.environ.pop("SPARK_GRAFT_CPUS", None)
-    from healthcare_entity_resolution_spark.operators import classify as C
     from healthcare_entity_resolution_spark.operators import scoring as S
+    from healthcare_entity_resolution_spark.pipeline import classify_code_pairs
     from healthcare_entity_resolution_spark.session import get_spark
     from pyspark.sql import functions as F
 
@@ -80,16 +79,7 @@ def child(cpus: int) -> None:
     best = None
     for _ in range(1):
         t0 = time.perf_counter()
-        scored = S.score_code_pairs(files, pairs)
-        classified = C.classify(
-            scored.withColumn(
-                "auth",
-                F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(
-                    F.lit(None).cast("double")
-                ),
-            ),
-            authoritative_col="auth",
-        )
+        classified = classify_code_pairs(files, pairs)
         n = classified.where(F.col("decision") == "match").count()
         dt = time.perf_counter() - t0
         best = dt if best is None or dt < best else best

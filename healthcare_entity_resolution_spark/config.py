@@ -31,13 +31,11 @@ class ResolutionConfig:
 
     # --- scale knobs (new; north_rule: salted repartition, hot-block cap) ---
     max_block_size: int = 200          # blocks larger than this get salted
-    max_pairs_per_block: int = 50_000  # lineage-logged cap, never silent
     shuffle_partitions: int = 32
     minhash_permutations: int = 64
     lsh_bands: int = 16                # 16 bands x 4 rows
     minhash_shingle_k: int = 5         # char-shingle width for MinHash tokens
     shingle_size: int = 3
-    checkpoint_every: int = 1          # CC: checkpoint each iteration
     cc_max_iterations: int = 50
     pagerank_alpha: float = 0.85
     pagerank_max_iter: int = 100

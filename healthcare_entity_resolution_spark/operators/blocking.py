@@ -85,9 +85,18 @@ def minhash_band_keys(
             out.append([k & 0x7FFFFFFFFFFFFFFF for k in textfn.lsh_band_keys(sig, bands=bands)])
         return pd.Series(out)
 
+    return band_block_keys(
+        df.select(F.col(id_col).alias("_id"), band_keys(F.col(text_col)).alias("_bands")),
+        "_id", "_bands", strategy,
+    )
+
+
+def band_block_keys(df: DataFrame, id_col: str, bands_col: str,
+                    strategy: str = "minhash") -> DataFrame:
+    """(_id, _bk = "mh:<band>", _strategy) rows, one per LSH band key in the
+    ``bands_col`` array — the keyed frame :func:`candidate_pairs` takes."""
     return (
-        df.select(F.col(id_col).alias("_id"), band_keys(F.col(text_col)).alias("_bands"))
-        .select("_id", F.explode("_bands").alias("_bkl"))
+        df.select(F.col(id_col).alias("_id"), F.explode(bands_col).alias("_bkl"))
         .select("_id", F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"))
         .withColumn("_strategy", F.lit(strategy))
     )
@@ -141,7 +150,6 @@ def candidate_pairs(
     keyed_union: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
-    with_block_stats: bool = False,
 ) -> DataFrame:
     """B5: within-block self-join across all strategies, canonical order,
     global dedup.  Input: union of (_id, _bk, _strategy) frames.
@@ -163,13 +171,9 @@ def candidate_pairs(
     pairs = (
         left.join(right, on=["_bk", "_salt"])
         .where(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2", "_bk")
+        .select("id_1", "id_2")
     )
-    if with_block_stats:
-        lineage.write_table(
-            pairs.groupBy("_bk").agg(F.count("*").alias("pair_count")), "block_pairs"
-        )
-    out = _checkpoint(pairs.select("id_1", "id_2").dropDuplicates(["id_1", "id_2"]))
+    out = _checkpoint(pairs.dropDuplicates(["id_1", "id_2"]))
     keyed.unpersist(blocking=False)
     return out
 

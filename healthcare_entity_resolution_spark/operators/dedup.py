@@ -131,20 +131,37 @@ def minhash_near_duplicates(
     pass.  ``est_slack`` defaults to 3 standard errors of the
     signature estimator (3 * sqrt(t(1-t)/num_perm)), so recall loss vs the
     always-exact variant is the binomial tail beyond 3 sigma (<~0.2%)."""
-    num_perm = cfg.minhash_permutations
+    state = minhash_doc_state(df, id_col, text_col, cfg).persist()
+    pairs = B.candidate_pairs(B.band_block_keys(state, "id", "_bands"), cfg)
+    out = verify_jaccard(pairs, state, state, cfg.minhash_permutations,
+                         jaccard_threshold, est_slack)
+    # eager checkpoint so the corpus-sized doc-state cache can be released
+    # before returning — repeated calls in one session must not accumulate
+    # cached signature/shingle blocks (same discipline as candidate_pairs)
+    from ._ckpt import checkpoint as _checkpoint
+
+    out = _checkpoint(out)
+    state.unpersist(blocking=False)
+    return out
+
+
+def verify_jaccard(
+    pairs: DataFrame,
+    left_state: DataFrame,
+    right_state: DataFrame,
+    num_perm: int,
+    jaccard_threshold: float,
+    est_slack: float | None = None,
+) -> DataFrame:
+    """Two-tier Jaccard verification of candidate ``pairs`` (id_1, id_2)
+    against :func:`minhash_doc_state`-shaped states (id, _sig, _shn):
+    signature-estimated Jaccard first (fixed-width join), exact
+    shingle-hash Jaccard second (fat arrays only for tier-1 survivors).
+    Returns (id_1, id_2, jaccard) with exact jaccard >= threshold."""
     if est_slack is None:
         est_slack = 3.0 * (jaccard_threshold * (1 - jaccard_threshold) / num_perm) ** 0.5
-
-    state = minhash_doc_state(df, id_col, text_col, cfg).persist()
-    keyed = (
-        state.select(F.col("id").alias("_id"), F.explode("_bands").alias("_bkl"))
-        .select("_id", F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"))
-        .withColumn("_strategy", F.lit("minhash"))
-    )
-    pairs = B.candidate_pairs(keyed, cfg)
-
-    s1 = state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
-    s2 = state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
+    s1 = left_state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
+    s2 = right_state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
     agree = F.size(F.filter(
         F.zip_with("_s1", "_s2", lambda x, y: x == y), lambda b: b
     ))
@@ -154,26 +171,18 @@ def minhash_near_duplicates(
         .select("id_1", "id_2")
     )
 
-    g1 = state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
-    g2 = state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
+    g1 = left_state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
+    g2 = right_state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
     inter = F.size(F.array_intersect("_h1", "_h2")).cast("double")
     # |A∪B| = |A|+|B|−|A∩B| exactly (shingle-hash arrays are distinct);
     # skips the per-pair union hash-set build — one array pass, not two
     union = F.size("_h1").cast("double") + F.size("_h2").cast("double") - inter
     jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    out = (
+    return (
         tier1.join(g1, "id_1").join(g2, "id_2")
         .select("id_1", "id_2", jac.alias("jaccard"))
         .where(F.col("jaccard") >= jaccard_threshold)
     )
-    # eager checkpoint so the corpus-sized doc-state cache can be released
-    # before returning — repeated calls in one session must not accumulate
-    # cached signature/shingle blocks (same discipline as candidate_pairs)
-    from ._ckpt import checkpoint as _checkpoint
-
-    out = _checkpoint(out)
-    state.unpersist(blocking=False)
-    return out
 
 
 def near_duplicate_groups(

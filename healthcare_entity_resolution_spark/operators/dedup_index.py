@@ -43,7 +43,7 @@ from ..config import DEFAULT_CONFIG, ResolutionConfig
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ._ckpt import checkpoint as _checkpoint
 from .components import connected_components
-from .dedup import minhash_doc_state
+from .dedup import minhash_doc_state, verify_jaccard
 
 DEFAULT_N_SHARDS = 256  # test-scale default; 4096+ at corpus scale
 
@@ -131,44 +131,6 @@ def _check_meta(meta: dict, cfg: ResolutionConfig) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _tier_verify(
-    pairs: DataFrame,
-    left_state: DataFrame,
-    right_state: DataFrame,
-    num_perm: int,
-    jaccard_threshold: float,
-    est_slack: float | None,
-) -> DataFrame:
-    """Two-tier Jaccard verification shared by the index-probe and
-    intra-batch paths: signature-estimated first (fixed-width join), exact
-    shingle-hash second (fat arrays only for tier-1 survivors).  Column
-    contract: ``pairs`` has (id_1, id_2); states have (id, _sig, _shn)."""
-    if est_slack is None:
-        est_slack = 3.0 * (
-            jaccard_threshold * (1 - jaccard_threshold) / num_perm
-        ) ** 0.5
-    s1 = left_state.select(F.col("id").alias("id_1"), F.col("_sig").alias("_s1"))
-    s2 = right_state.select(F.col("id").alias("id_2"), F.col("_sig").alias("_s2"))
-    agree = F.size(
-        F.filter(F.zip_with("_s1", "_s2", lambda x, y: x == y), lambda b: b)
-    )
-    tier1 = (
-        pairs.join(s1, "id_1").join(s2, "id_2")
-        .where(agree >= F.lit(num_perm * (jaccard_threshold - est_slack)))
-        .select("id_1", "id_2")
-    )
-    g1 = left_state.select(F.col("id").alias("id_1"), F.col("_shn").alias("_h1"))
-    g2 = right_state.select(F.col("id").alias("id_2"), F.col("_shn").alias("_h2"))
-    inter = F.size(F.array_intersect("_h1", "_h2")).cast("double")
-    union = F.size("_h1").cast("double") + F.size("_h2").cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return (
-        tier1.join(g1, "id_1").join(g2, "id_2")
-        .select("id_1", "id_2", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
-
-
 def query_dedup_index(
     new_df: DataFrame,
     path: str,
@@ -238,7 +200,7 @@ def query_dedup_index(
         .dropDuplicates(["query_id", "index_id"])
     )
     istate = spark.read.parquet(f"{path}/state").dropDuplicates(["id"])
-    out = _tier_verify(
+    out = verify_jaccard(
         cand.select(
             F.col("query_id").alias("id_1"), F.col("index_id").alias("id_2")
         ),
@@ -300,18 +262,9 @@ def incremental_dedup_step(
 
     # intra-batch near-dups among docs that survived the index probe
     surv_state = state.join(dropped_vs_index, "id", "left_anti").persist()
-    keyed = (
-        surv_state.select(F.col("id").alias("_id"), F.explode("_bands").alias("_bkl"))
-        .select(
-            "_id",
-            F.concat(F.lit("mh:"), F.col("_bkl").cast("string")).alias("_bk"),
-        )
-        .withColumn("_strategy", F.lit("minhash"))
-    )
-    pairs = B.candidate_pairs(keyed, cfg, lineage)
-    intra = _tier_verify(
-        pairs, surv_state, surv_state, cfg.minhash_permutations,
-        jaccard_threshold, None,
+    pairs = B.candidate_pairs(B.band_block_keys(surv_state, "id", "_bands"), cfg, lineage)
+    intra = verify_jaccard(
+        pairs, surv_state, surv_state, cfg.minhash_permutations, jaccard_threshold,
     )
     intra = _checkpoint(intra).persist()
     # transitive min-id keep: only each duplicate group's minimum id survives

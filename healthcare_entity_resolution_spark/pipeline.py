@@ -5,10 +5,11 @@ connected components -> canonical entities over a
 ``files(repo, path, commit, lang, content)`` corpus.
 
 Stage boundaries that shuffle: blocking self-join, CC iterations,
-survivorship groupBy.  ``files`` and ``pairs`` are persisted across their
-two consumers and unpersisted when the stage ends.  Component ids are the
-minimum member file_id (sha256 hex) — deterministic across runs and cluster
-sizes by construction.
+survivorship groupBy.  The same stages run in memory (persisted) or, given
+a run directory, as resumable snapshot commits — there is one flow, not a
+batch copy and a resumable copy.  Component ids are the minimum member
+file_id (sha256 hex) — deterministic across runs and cluster sizes by
+construction.
 """
 
 from __future__ import annotations
@@ -25,6 +26,38 @@ from .operators import components as G
 from .operators import normalize as N
 from .operators import scoring as S
 from .plans.lineage import NULL_LINEAGE, LineageLog
+from .plans.snapshots import SnapshotStore
+
+# the code-file ER stage boundaries, in run order; a run directory holds one
+# snapshot per name
+CODE_STAGES = ("files", "pairs", "classified", "assignments")
+
+
+def code_representatives(files: DataFrame) -> DataFrame:
+    """(content_sha, file_id) of each distinct content's representative: its
+    minimum file_id.
+
+    Identical content (sha equal) is an authoritative same-entity decision
+    (score 0.95 trump — the NPI analog), so byte-identical files collapse
+    to ONE representative before any fuzzy work.  At 100 TB exact
+    duplicates are the biggest hot blocks (a popular license file appears
+    millions of times); resolving representatives only turns those C(n,2)
+    explosions into a hash-groupBy, and the sha join at the end of
+    :func:`resolve_files` fans the decision back out.  groupBy(content_sha)
+    — not a window — so the map-side partial aggregation does the heavy
+    lifting."""
+    return files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
+
+
+def classify_code_pairs(rep_files: DataFrame, pairs: DataFrame,
+                        cfg: ResolutionConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Score candidate file pairs and classify them.  Content-sha equality
+    is authoritative (equal -> same entity at 0.95; inequality is NOT a
+    conflict, unlike NPI)."""
+    scored = S.score_code_pairs(rep_files, pairs, cfg).withColumn(
+        "auth", F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double"))
+    )
+    return C.classify(scored, cfg, authoritative_col="auth")
 
 
 def resolve_files(
@@ -32,49 +65,53 @@ def resolve_files(
     raw_files: DataFrame,
     cfg: ResolutionConfig = DEFAULT_CONFIG,
     lineage: LineageLog = NULL_LINEAGE,
+    run_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """Full code-corpus entity resolution.  Returns the stage DataFrames:
-    files, pairs, scored, classified, matches, assignments, entities."""
-    t0 = time.perf_counter()
-    files = N.normalize_files(raw_files).persist()
-    n_files = files.count()
-    lineage.log("normalize", rows=n_files, sec=time.perf_counter() - t0)
+    files, pairs, classified, matches, assignments, entities.
 
-    # --- exact-dedup pre-pass -------------------------------------------
-    # Identical content (sha equal) is an authoritative same-entity decision
-    # (score 0.95 trump — the NPI analog), so byte-identical files collapse
-    # to ONE representative (min file_id) before any fuzzy work.  At 100 TB
-    # exact duplicates are the biggest hot blocks (a popular license file
-    # appears millions of times); resolving representatives only turns those
-    # C(n,2) explosions into a hash-groupBy, and the sha join at the end
-    # fans the decision back out.  groupBy(content_sha) — not a window — so
-    # the map-side partial aggregation does the heavy lifting.
-    reps = files.groupBy("content_sha").agg(F.min("file_id").alias("file_id"))
+    Each of :data:`CODE_STAGES` ends at a boundary.  In memory the stage's
+    frame is persisted and counted.  With ``run_dir`` it is committed as a
+    snapshot there instead (``resume.<name>`` logged), and a rerun loads
+    every committed stage rather than recomputing it."""
+    store = SnapshotStore(spark, run_dir) if run_dir else None
+
+    def stage(name: str, build, persist: bool = True) -> tuple[DataFrame, int, float | None]:
+        """(frame, rows, seconds); seconds is None for a loaded snapshot,
+        whose load time is not the stage's cost."""
+        t = time.perf_counter()
+        resumed = False
+        if store is None:
+            df = build().persist() if persist else build()
+        else:
+            df, resumed = store.stage(name, build)
+            lineage.log(f"resume.{name}", resumed=resumed)
+        n = df.count()
+        return df, n, None if resumed else time.perf_counter() - t
+
+    t0 = time.perf_counter()
+    files, n_files, sec = stage("files", lambda: N.normalize_files(raw_files))
+    lineage.log("normalize", rows=n_files, sec=sec)
+
+    reps = code_representatives(files)
     rep_files = files.join(reps, ["content_sha", "file_id"]).persist()
     n_reps = rep_files.count()
     lineage.log("exact_dedup", rows=n_files, representatives=n_reps,
                 exact_duplicates=n_files - n_reps)
 
-    t1 = time.perf_counter()
-    keys = B.code_file_block_keys(rep_files, cfg)
     # candidate_pairs returns an eagerly checkpointed frame (materialized,
     # lineage truncated) — no extra persist layer needed
-    pairs = B.candidate_pairs(keys, cfg, lineage)
-    n_pairs = pairs.count()
-    lineage.log("blocking", pairs=n_pairs, sec=time.perf_counter() - t1)
-
-    t2 = time.perf_counter()
-    scored = S.score_code_pairs(rep_files, pairs, cfg)
-    # authoritative trump column: content sha equality (NPI analog; equal ->
-    # same entity at 0.95; inequality is NOT a conflict, unlike NPI)
-    scored = scored.withColumn(
-        "auth", F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double"))
+    pairs, n_pairs, sec = stage(
+        "pairs",
+        lambda: B.candidate_pairs(B.code_file_block_keys(rep_files, cfg), cfg, lineage),
+        persist=False,
     )
-    classified = C.classify(scored, cfg, authoritative_col="auth").persist()
-    n_scored = classified.count()
-    score_sec = time.perf_counter() - t2
-    lineage.log("scoring", pairs=n_scored, sec=score_sec,
-                pairs_per_sec=(n_scored / score_sec if score_sec > 0 else None))
+    lineage.log("blocking", pairs=n_pairs, sec=sec)
+
+    classified, n_scored, sec = stage(
+        "classified", lambda: classify_code_pairs(rep_files, pairs, cfg))
+    lineage.log("scoring", pairs=n_scored, sec=sec,
+                pairs_per_sec=(n_scored / sec if sec else None))
     # per-partition score-batch latency -> lineage (north_rule)
     lineage.write_table(
         classified.groupBy(F.spark_partition_id().alias("partition_id")).agg(
@@ -83,26 +120,27 @@ def resolve_files(
         "score_batches",
     )
 
-    t3 = time.perf_counter()
     matches = C.confirmed_matches(classified, cfg)
-    rep_assign = G.connected_components(
-        matches,
-        vertices=rep_files.select(F.col("file_id").alias("id")),
-        cfg=cfg,
-        lineage=lineage,
-    )
-    # fan the representative decision back out: every file joins its
-    # content-sha representative's component (broadcast-sized at test scale;
-    # a plain shuffled equi-join on content_sha at cluster scale)
-    assignments = (
-        files.select("file_id", "content_sha")
-        .join(reps.withColumnRenamed("file_id", "rep_id"), "content_sha")
-        .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
-        .select(F.col("file_id").alias("id"), "component_id")
-        .persist()
-    )
-    n_nodes = assignments.count()
-    lineage.log("clustering", nodes=n_nodes, sec=time.perf_counter() - t3)
+
+    def build_assignments() -> DataFrame:
+        rep_assign = G.connected_components(
+            matches,
+            vertices=rep_files.select(F.col("file_id").alias("id")),
+            cfg=cfg,
+            lineage=lineage,
+        )
+        # fan the representative decision back out: every file joins its
+        # content-sha representative's component (broadcast-sized at test
+        # scale; a plain shuffled equi-join on content_sha at cluster scale)
+        return (
+            files.select("file_id", "content_sha")
+            .join(reps.withColumnRenamed("file_id", "rep_id"), "content_sha")
+            .join(rep_assign.withColumnRenamed("id", "rep_id"), "rep_id")
+            .select(F.col("file_id").alias("id"), "component_id")
+        )
+
+    assignments, n_nodes, sec = stage("assignments", build_assignments)
+    lineage.log("clustering", nodes=n_nodes, sec=sec)
 
     entities = (
         assignments.join(files, assignments["id"] == files["file_id"])

@@ -57,10 +57,15 @@ def search_physicians(
 def search_metrics(filtered: DataFrame) -> DataFrame:
     """Page-01 metrics row (01_physician_search.py:86-97): one-row summary
     of a search result — total, mean confidence, NPI coverage, mean source
-    count.  A single partial-aggregate job regardless of result size."""
+    count.  A single partial-aggregate job regardless of result size.
+
+    The mean confidence is summed as a decimal: a double sum depends on
+    how rows are split into partitions, so the same search would read
+    differently (in the last digit) on clusters of different sizes."""
     return filtered.agg(
         F.count("*").alias("total_matching"),
-        F.avg("confidence_score").alias("avg_confidence"),
+        F.avg(F.col("confidence_score").cast("decimal(38,18)"))
+        .cast("double").alias("avg_confidence"),
         F.count("npi").alias("with_npi"),
         F.avg("source_count").alias("avg_sources"),
     )

@@ -14,6 +14,14 @@ from pyspark.sql import SparkSession
 _CHECKPOINT_DIR = os.path.join(tempfile.gettempdir(), "her_spark_checkpoints")
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory: the driver heap shares the host with
+    the Python workers and the JVM's off-heap use, and a heap sized past
+    the host gets the JVM OOM-killed mid-run."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "healthcare_entity_resolution_spark",
     cores: int | None = None,
@@ -41,7 +49,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("HER_ARROW_BATCH", "16384"))
-        .config("spark.driver.memory", os.environ.get("HER_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("HER_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

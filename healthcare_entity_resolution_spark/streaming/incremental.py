@@ -38,7 +38,7 @@ from ..operators import blocking as B
 from ..operators import classify as C
 from ..operators import components as G
 from ..operators import normalize as N
-from ..operators import scoring as S
+from ..pipeline import classify_code_pairs
 from ..plans.lineage import NULL_LINEAGE, LineageLog
 from ..plans.snapshots import SnapshotStore
 
@@ -140,12 +140,8 @@ def micro_batch_resolve(
         )
         .dropDuplicates(["id_1", "id_2"])
     )
-    scored = S.score_code_pairs(all_files, cand, cfg).withColumn(
-        "auth",
-        F.when(F.col("sha_equal"), F.lit(1.0)).otherwise(F.lit(None).cast("double")),
-    )
     new_matches = C.confirmed_matches(
-        C.classify(scored, cfg, authoritative_col="auth"), cfg
+        classify_code_pairs(all_files, cand, cfg), cfg
     ).select("id_1", "id_2").persist()
     n_pairs = new_matches.count()
 

@@ -29,10 +29,12 @@ def main() -> None:
                     help="local[N] cores (ignored under a real cluster master)")
     args = ap.parse_args()
 
-    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
-    from healthcare_entity_resolution_spark.plans.snapshots import (
-        resumable_resolve_files,
+    from healthcare_entity_resolution_spark.pipeline import (
+        CODE_STAGES,
+        documents_as_files,
+        resolve_files,
     )
+    from healthcare_entity_resolution_spark.plans.lineage import LineageLog
     from healthcare_entity_resolution_spark.session import get_spark
 
     spark = get_spark(app_name="her_pipeline", cores=args.cores)
@@ -43,10 +45,6 @@ def main() -> None:
         if {"doc_id", "text"} <= set(raw.columns):
             # documents-shaped input (the testdata tables): adapt in place
             from pyspark.sql import functions as F
-
-            from healthcare_entity_resolution_spark.pipeline import (
-                documents_as_files,
-            )
 
             for col, default in (("lang", "unknown"), ("source", "docs")):
                 if col not in raw.columns:
@@ -64,10 +62,10 @@ def main() -> None:
         # fresh run: clear prior snapshots so every stage recomputes
         import shutil
 
-        for name in ("files", "pairs", "classified", "assignments"):
+        for name in CODE_STAGES:
             shutil.rmtree(os.path.join(args.output, name), ignore_errors=True)
 
-    out = resumable_resolve_files(spark, raw, args.output, lineage=lineage)
+    out = resolve_files(spark, raw, lineage=lineage, run_dir=args.output)
     n = out["assignments"].count()
 
     from healthcare_entity_resolution_spark.plans.report_html import (

@@ -13,7 +13,7 @@ from healthcare_entity_resolution_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="her_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="her_tests", shuffle_partitions=8)
     yield s
 
 

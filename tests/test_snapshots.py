@@ -9,10 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from healthcare_entity_resolution_spark.corpus import generate_files_corpus
+from healthcare_entity_resolution_spark.pipeline import CODE_STAGES, resolve_files
 from healthcare_entity_resolution_spark.plans.snapshots import (
     SnapshotStore,
     anti_join_completed,
-    resumable_resolve_files,
 )
 
 
@@ -62,14 +62,16 @@ def test_resumable_pipeline_matches_and_resumes(spark, run_dir):
     files = spark.createDataFrame(
         files_pdf[["repo", "path", "commit", "lang", "content"]]
     )
-    out1 = resumable_resolve_files(spark, files, run_dir)
+    out1 = resolve_files(spark, files, run_dir=run_dir)
     a1 = sorted(map(tuple, out1["assignments"].collect()))
+    # snapshot mode runs the same stages as the in-memory flow
+    assert a1 == sorted(map(tuple, resolve_files(spark, files)["assignments"].collect()))
 
     # second run with the same run_dir: every stage must resume, results equal
     from healthcare_entity_resolution_spark.plans.lineage import LineageLog
 
     lin = LineageLog()
-    out2 = resumable_resolve_files(spark, files, run_dir, lineage=lin)
+    out2 = resolve_files(spark, files, lineage=lin, run_dir=run_dir)
     a2 = sorted(map(tuple, out2["assignments"].collect()))
     assert a1 == a2
     resume_flags = {e["stage"]: e["resumed"] for e in lin.events
@@ -80,12 +82,46 @@ def test_resumable_pipeline_matches_and_resumes(spark, run_dir):
     # final stage recomputes to the same answer
     shutil.rmtree(f"{run_dir}/assignments")
     lin2 = LineageLog()
-    out3 = resumable_resolve_files(spark, files, run_dir, lineage=lin2)
+    out3 = resolve_files(spark, files, lineage=lin2, run_dir=run_dir)
     flags = {e["stage"]: e["resumed"] for e in lin2.events
              if e["stage"].startswith("resume.")}
     assert flags["resume.files"] and flags["resume.pairs"] and flags["resume.classified"]
     assert not flags["resume.assignments"]
     assert sorted(map(tuple, out3["assignments"].collect())) == a1
+
+
+def test_run_pipeline_entry_resumes(spark, tmp_path, monkeypatch, capsys):
+    """The spark-submit entry point, in-process: a fresh run commits every
+    stage, a --resume run over the same output loads every stage back."""
+    import json
+    import os
+
+    import run_pipeline
+
+    pdf, _ = generate_files_corpus(n_entities=20, seed=3)
+    src = str(tmp_path / "input.parquet")
+    spark.createDataFrame(pdf[["repo", "path", "commit", "lang", "content"]]) \
+        .write.parquet(src)
+    out_dir = str(tmp_path / "run")
+    events = f"{out_dir}/lineage_events.jsonl"
+
+    def run(*extra):
+        """One in-process run: (summary JSON, resume flags it logged)."""
+        n_before = len(open(events).readlines()) if os.path.exists(events) else 0
+        monkeypatch.setattr(
+            "sys.argv", ["run_pipeline.py", "--input", src, "--output", out_dir, *extra])
+        run_pipeline.main()
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        flags = {e["stage"]: e["resumed"]
+                 for e in map(json.loads, open(events).readlines()[n_before:])
+                 if e["stage"].startswith("resume.")}
+        return summary, flags
+
+    fresh, flags = run()
+    assert flags == {f"resume.{name}": False for name in CODE_STAGES}
+    resumed, flags = run("--resume")
+    assert flags == {f"resume.{name}": True for name in CODE_STAGES}
+    assert resumed["assignments"] == fresh["assignments"] == len(pdf)
 
 
 def test_html_run_report(spark, tmp_path):
